@@ -9,8 +9,8 @@ set-up and read back as the pages table.
 ner_scan        pages -> fused NER UDF -> per-doc term sets -> exploded
                 terms + expand_pairs/salted_count pair counts -> noop sink.
                 The Python/Arrow and salted-aggregation layers do the work.
-kg_build_serve  pipeline.build_kg (modular default, cue_triples, every side
-                input), build_kg again over the committed stages, then a
+kg_build_serve  pipeline.build_kg (modular default, cue_triples, no side
+                inputs), build_kg again over the committed stages, then a
                 closed loop of one client against KgApi over that KG.
                 Assembly, closure, lineage and query serving do the work.
 """
@@ -26,15 +26,17 @@ from statistics import median
 
 from .corpus import CorpusWriter
 
-NER_SCAN_PAGES = 40_000
+NER_SCAN_PAGES = 16_000
 NER_SCAN_CHUNKS = 4
-KG_PAGES = 10_000
-SETUP_REPS = 3
-MIN_PASSES = 5
+KG_PAGES = 3_000
+SETUP_REPS = 3  # ner_scan set-ups; kg_build_serve times KG_INITS KgApi inits
+KG_INITS = 3
+WARMUP_PASSES = 4
+MIN_PASSES = 9
+MIN_CYCLES = 1
 ORACLE_SAMPLE = 300
-# one closed-loop cycle: search 40%, the other three endpoints 20% each
-REQUEST_CYCLE = ["search", "search", "text_relations", "autocomplete",
-                 "indicators"]
+# one closed-loop cycle: search 50%, text_relations and autocomplete 25%
+REQUEST_CYCLE = ["search", "search", "text_relations", "autocomplete"]
 
 
 class Failures:
@@ -129,8 +131,9 @@ def ner_scan(ctx) -> dict:
 
     tracing = tr.enabled
     # warm-up: starts the Python workers and fills the JIT; not timed
-    _w, sets, _c = one_pass(False)
-    sets.unpersist()
+    for _ in range(WARMUP_PASSES):
+        _w, sets, _c = one_pass(False)
+        sets.unpersist()
     ctx.mark("warm-up")
     passes = {True: [], False: []}
     t_end = time.monotonic() + ctx.seconds
@@ -155,7 +158,6 @@ def ner_scan(ctx) -> dict:
     walls = passes[tracing]
     res = {
         "docs_per_s": n_pages / median(walls),
-        "op_p50_ms": median(walls) * 1e3,
         "setup_s": median(setups),
     }
     ctx.info.update(passes=len(walls), pages=n_pages,
@@ -244,25 +246,14 @@ _STAGE_LAYER = {
 }
 
 
-def _kg_inputs(spark, inputs):
+def _kg_side_inputs(spark):
+    """build_kg's keyword inputs other than the corpus tables. The optional
+    side inputs (pathogen, phenotype, indicator and geoname tables) stay
+    out: they add about 25 s to every cold build on a 4-core host."""
     from outbreak_kg_spark import synth
 
-    return dict(
-        pages=spark.read.parquet(*inputs.files("part")),
-        gazetteer=synth.gazetteer_df(spark),
-        vocab_isa=synth.vocab_isa_df(spark),
-        outbreaks=spark.read.parquet(*inputs.files("outbreaks")),
-        pathogen_rels=synth.pathogen_disease_rels_df(spark),
-        xref=synth.xref_df(spark),
-        phenotype_rels=synth.phenotype_rels_df(spark),
-        indicators_dev=synth.indicator_wide_df(spark, "dev"),
-        indicators_health=synth.indicator_wide_df(spark, "health"),
-        geoname_terms=synth.geoname_terms_df(spark),
-        geoname_partof=synth.geoname_partof_df(spark),
-        geoname_grounding=synth.geoname_grounding_df(spark),
-        location_map=synth.location_map_df(spark),
-        cue_triples=True,
-    )
+    return dict(gazetteer=synth.gazetteer_df(spark),
+                vocab_isa=synth.vocab_isa_df(spark), cue_triples=True)
 
 
 def _wrap_kg_layers(tr) -> None:
@@ -276,8 +267,7 @@ def _wrap_kg_layers(tr) -> None:
     tr.wrap(lineage, "read_lineage", "lineage.read_lineage")
     for name in ("build_outbreaks", "build_alert_nodes_and_mentions",
                  "build_cooccurrence", "build_vocab_hierarchy",
-                 "build_pathogen_disease", "build_disease_phenotype",
-                 "build_indicators", "build_geonames", "finalize_graph"):
+                 "finalize_graph"):
         tr.wrap(builders, name, f"builders.{name}")
     tr.wrap(closure, "closure_with_roots", "closure.closure_with_roots")
     for name in ("extract_pages", "dedup_alerts", "explode_section_texts"):
@@ -287,8 +277,7 @@ def _wrap_kg_layers(tr) -> None:
         tr.wrap(ground, name, f"ground.{name}")
     for name in ("mentions_to_sentences", "pattern_triples_grouped"):
         tr.wrap(triples, name, f"triples.{name}")
-    for name in ("search", "text_relations", "autocomplete",
-                 "get_indicators"):
+    for name in ("search", "text_relations", "autocomplete"):
         tr.wrap(api.KgApi, name, f"api.{name}")
     tr.wrap(api.KgApi, "__init__", "api.init")
 
@@ -297,8 +286,10 @@ def kg_build_serve(ctx) -> dict:
     from outbreak_kg_spark import api, lineage, pipeline
 
     spark, tr, fails = ctx.spark, ctx.tracer, ctx.failures
+    kw = _kg_side_inputs(spark)  # while the corpus is being written
     pages, ctx.info["input"] = ctx.inputs.wait()
-    kw = _kg_inputs(spark, ctx.inputs)
+    kw.update(pages=spark.read.parquet(*ctx.inputs.files("part")),
+              outbreaks=spark.read.parquet(*ctx.inputs.files("outbreaks")))
     root = os.path.join(ctx.work, "kg")
     _wrap_kg_layers(tr)
     ctx.mark("inputs")
@@ -322,7 +313,7 @@ def kg_build_serve(ctx) -> dict:
                 f"resume re-ran a stage: {sorted(runs.items())}")
 
     inits = []
-    for _ in range(SETUP_REPS):
+    for _ in range(KG_INITS):
         t0 = time.monotonic()
         app = api.KgApi(spark, out["nodes"], out["edges"], out["closure"],
                         kw["gazetteer"], extracted=out["extracted"],
@@ -338,11 +329,11 @@ def kg_build_serve(ctx) -> dict:
     all_lat = [x for v in lat.values() for x in v]
     res = {
         "docs_per_s": len(pages) / build_s,
-        "op_p50_ms": median(all_lat) * 1e3,
         "setup_s": median(inits),
     }
     ctx.info.update(pages=len(pages), build_s=round(build_s, 3),
                     resume_s=round(resume_s, 3), requests=len(all_lat),
+                    req_p50_ms=round(median(all_lat) * 1e3, 1),
                     req_per_s=round(len(all_lat) / sum(all_lat), 3),
                     req_p90_ms=round(statistics.quantiles(
                         all_lat, n=10)[-1] * 1e3, 1)
@@ -442,8 +433,6 @@ def _requests(rng):
     for i, name, t, _p, _syns in synth.MESH_VOCAB:
         if name != "Disease":  # excluded from the graph by the builders
             by_type.setdefault(t, []).append((i, name))
-    countries = ["Guinea", "Bulgaria", "Viet Nam", "South Korea",
-                 "Sierra Leone"]
     while True:
         cycle = list(REQUEST_CYCLE)
         rng.shuffle(cycle)
@@ -459,13 +448,11 @@ def _requests(rng):
                 g1, g2 = rng.sample(by_type["geoloc"], 2)
                 yield kind, {"text": f"{d[1]} cases caused by {p[1]} were "
                              f"reported in {g1[1]} and {g2[1]}"}, None
-            elif kind == "autocomplete":
+            else:
                 label = rng.choice(["disease", "pathogen", "geoloc"])
                 name = rng.choice(by_type[label])[1]
                 yield kind, {"label": label,
                              "prefix": name[:rng.randint(1, 3)].lower()}, None
-            else:
-                yield kind, {"geolocation": rng.choice(countries)}, None
 
 
 def _call(app, kind: str, args: dict):
@@ -473,9 +460,7 @@ def _call(app, kind: str, args: dict):
         return app.search(**args)
     if kind == "text_relations":
         return app.text_relations(**args)
-    if kind == "autocomplete":
-        return app.autocomplete(**args)
-    return app.get_indicators(**args)
+    return app.autocomplete(**args)
 
 
 def _answer_ok(graph, gaz_rows, kind, args, anchors, ans) -> bool:
@@ -488,16 +473,15 @@ def _answer_ok(graph, gaz_rows, kind, args, anchors, ans) -> bool:
         return {a["curie"] for a in ans["annotations"]} == {
             f"{ns}:{i}" for _s, ns, i, _n in
             oracle.oracle_annotate(args["text"], gaz_rows)}
-    if kind == "autocomplete":
-        return len(ans) <= 100 and all(
-            h[0].lower().startswith(args["prefix"]) for h in ans)
-    return bool(ans) and all(isinstance(r["years_data"], dict) for r in ans)
+    return len(ans) <= 100 and all(
+        h[0].lower().startswith(args["prefix"]) for h in ans)
 
 
 def _serve(ctx, app, graph) -> dict:
     """Closed loop, one client: the next request is sent when the previous
     answer is back. One untimed cycle compiles the query plans first;
-    then whole cycles run until --seconds have passed. Every answer is
+    then whole cycles run until --seconds have passed and at least
+    MIN_CYCLES were measured. Every answer is
     checked. Returns the measured latencies by request kind."""
     from outbreak_kg_spark import synth
 
@@ -510,10 +494,10 @@ def _serve(ctx, app, graph) -> dict:
     per_cycle = len(REQUEST_CYCLE)
     # a traced run alternates traced and untraced cycles, so the tracing
     # overhead is measured inside one process
-    min_cycles = 2 if tracing else 1
+    step = 2 if tracing else 1
     n, t_end = -per_cycle, float("inf")
-    while n < 0 or time.monotonic() < t_end or n < per_cycle * min_cycles \
-            or n % (per_cycle * min_cycles):
+    while n < 0 or time.monotonic() < t_end \
+            or n < per_cycle * MIN_CYCLES * step or n % (per_cycle * step):
         if n == 0:
             t_end = time.monotonic() + ctx.seconds
         kind, args, anchors = next(stream)
@@ -596,7 +580,6 @@ def _kg_layers(ctx, lin, build_s, resume_s, inits, lat) -> dict:
         "queries.search_p50_ms": median(lat["search"]) * 1e3,
         "queries.text_relations_p50_ms": median(lat["text_relations"]) * 1e3,
         "queries.autocomplete_p50_ms": median(lat["autocomplete"]) * 1e3,
-        "queries.indicators_p50_ms": median(lat["indicators"]) * 1e3,
         "queries.jobs_per_req": len(sm.jobs_in(in_reqs)) / n_req,
         "catalog.rows_scanned_per_req": sm.node_metric(
             in_reqs, "number of output rows", "Scan parquet") / n_req,
